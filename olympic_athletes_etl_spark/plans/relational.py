@@ -12,6 +12,8 @@ queries users copy as templates.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -1802,6 +1804,23 @@ def rollup_load(spark: SparkSession, path: str) -> DataFrame:
     return g
 
 
+def _refuse_streaming_store(store: GenStore, op: str, family: str) -> None:
+    """Raise if ``store`` was written by the streaming ingest: its
+    current generation holds ``batch_id=`` partition directories. A
+    directory listing, not a parquet read — no schema inference job."""
+    with os.scandir(store.data_dir()) as entries:
+        streaming = any(
+            e.name.startswith("batch_id=") and e.is_dir() for e in entries
+        )
+    if streaming:
+        raise ValueError(
+            f"{op}: {store.path} is a streaming {family} store "
+            "(batch_id-partitioned); use streaming.pipeline."
+            f"stream_{family}_compact so replayed micro-batches can't "
+            "double-count folded partials"
+        )
+
+
 def rollup_compact(spark: SparkSession, path: str) -> None:
     """Fold the per-batch partial rows back to ONE row per month and
     one file per month directory — like lsh_postings_compact, except
@@ -1819,15 +1838,9 @@ def rollup_compact(spark: SparkSession, path: str) -> None:
     would both break the partition layout and let a checkpoint replay
     double-count a folded batch. Refused loudly; use
     stream_rollup_compact, which folds only committed batches."""
-    data_dir = _rollup_gen_store(path).data_dir()
-    if "batch_id" in spark.read.parquet(data_dir).columns:
-        raise ValueError(
-            f"rollup_compact: {path} is a streaming rollup store "
-            "(batch_id-partitioned); use streaming.pipeline."
-            "stream_rollup_compact so replayed micro-batches can't "
-            "double-count folded partials"
-        )
-    _rollup_gen_store(path).compact(spark)
+    store = _rollup_gen_store(path)
+    _refuse_streaming_store(store, "rollup_compact", "rollup")
+    store.compact(spark)
 
 
 def rollup_serve(spark: SparkSession, path: str) -> DataFrame:
@@ -2020,13 +2033,7 @@ def qhist_rollup_compact(spark: SparkSession, path: str) -> None:
     re-materialize its partition and double-count, and later folds
     would mix batch_id- and month-partitioned files in one generation."""
     store = _qhist_gen_store(path)
-    if "batch_id" in spark.read.parquet(store.data_dir()).columns:
-        raise ValueError(
-            f"qhist_rollup_compact: {path} is a streaming qhist store "
-            "(batch_id-partitioned); use streaming.pipeline."
-            "stream_qhist_compact so replayed micro-batches can't "
-            "double-count folded partials"
-        )
+    _refuse_streaming_store(store, "qhist_rollup_compact", "qhist")
     store.compact(spark)
 
 
