@@ -41,7 +41,7 @@ def _observed_checkpoint(
     probe pays 2+ jobs: CollectLimit escalates through partition
     batches before concluding the frame is empty); ``observe`` folds
     the same aggregate into the checkpoint's own pass (guide §2.4/§5 —
-    measured 3 jobs → 1 per label-CC round, tools/probe_observe.py).
+    measured 3 jobs → 1 per label-CC round, OPTIMIZATION_r14.md batch 1).
     ``keep`` projects the checkpointed output ABOVE the observe node,
     so metric-only columns are never materialized into the checkpoint.
     CollectMetrics is a row-level pass-through: the checkpointed rows
@@ -191,76 +191,6 @@ def dedup_clusters(
             F.col("vertex").alias(id_col),
             F.coalesce("component", F.col("vertex")).alias("cluster"),
         )
-    )
-
-
-def pagerank(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    damping: float = 0.85,
-    n_iter: int = 10,
-) -> DataFrame:
-    """(vertex, rank) — PageRank over a DIRECTED edge list, fixed
-    iteration count (deterministic: no convergence-threshold float
-    compare; same input → same plan → same ranks).
-
-    Per iteration, one shuffle pattern: contributions = rank/out_degree
-    shipped along edges (join on src), summed per destination (aggregate
-    on dst), then the damping update. Dangling vertices (no out-edges)
-    redistribute nothing — their mass exits and the (1-d) teleport term
-    keeps the total bounded; ranks are normalized to sum = n_vertices at
-    the end so the output is comparable across graphs. localCheckpoint
-    truncates lineage each round exactly as connected_components does.
-
-    At 100 TB: per-round cost is |edges| shuffle bytes keyed on vertex
-    ids; heavy-hitter hub vertices are the skew risk — AQE skew splitting
-    handles the aggregate side, and the join side is bounded by
-    out-degree (k in a KNN graph). Tolerance-tested like the sketches —
-    iterative float fixpoints are not oracle-hashable.
-    """
-    e = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
-        .dropDuplicates()
-        .localCheckpoint(eager=True)
-    )
-    verts = (
-        e.select(F.col("s").alias("vertex"))
-        .unionByName(e.select(F.col("t").alias("vertex")))
-        .dropDuplicates()
-        .localCheckpoint(eager=True)
-    )
-    n = verts.count()
-    out_deg = e.groupBy(F.col("s").alias("vertex")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
-    ranks = verts.withColumn("rank", F.lit(1.0))
-    for _ in range(n_iter):
-        contribs = (
-            e.join(ranks, e["s"] == ranks["vertex"])
-            .join(out_deg, "vertex")
-            .select(F.col("t").alias("vertex"), (F.col("rank") / F.col("deg")).alias("c"))
-            .groupBy("vertex")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        prev = ranks
-        ranks = (
-            verts.join(contribs, "vertex", "left")
-            .select(
-                "vertex",
-                (
-                    F.lit(1.0 - damping)
-                    + F.lit(damping) * F.coalesce("inflow", F.lit(0.0))
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        # superseded round checkpoint (round 1's prev is unmaterialized
-        # and the release no-ops) — keep ONE rank table live
-        _release_checkpoint(prev)
-    total = ranks.agg(F.sum("rank").alias("t"))
-    return ranks.crossJoin(F.broadcast(total)).select(
-        "vertex", (F.col("rank") * n / F.col("t")).alias("rank")
     )
 
 
@@ -487,6 +417,41 @@ def bfs_depths(
     return visited
 
 
+def _pagerank_round(
+    base: DataFrame,
+    ranks: DataFrame,
+    e: DataFrame,
+    out_deg: DataFrame,
+    teleport: int,
+    damping_num: int,
+    damping_den: int,
+    *extra: F.Column,
+) -> DataFrame:
+    """One fixed-point PageRank round: ``ranks`` (node, rank) → the next
+    (node, rank, *extra) over ``base``'s nodes. The single update shared
+    by ``pagerank_fixed_point`` and ``pagerank_converged``, so the two
+    cannot drift apart in arithmetic."""
+    shares = ranks.join(out_deg, ranks["node"] == out_deg["s"]).select(
+        F.col("s"), F.expr("rank div deg").alias("share")
+    )
+    inflow = (
+        e.join(shares, "s")
+        .groupBy(F.col("t").alias("node"))
+        .agg(F.sum("share").alias("inflow"))
+    )
+    return base.join(inflow, "node", "left").select(
+        "node",
+        (
+            F.lit(teleport)
+            + F.expr(
+                f"({damping_num} * coalesce(inflow, CAST(0 AS BIGINT)))"
+                f" div {damping_den}"
+            )
+        ).alias("rank"),
+        *extra,
+    )
+
+
 def pagerank_fixed_point(
     edges: DataFrame,
     src: str = "src",
@@ -497,9 +462,8 @@ def pagerank_fixed_point(
     damping_den: int = 100,
 ) -> DataFrame:
     """(node, rank) — PageRank in FIXED-POINT integer arithmetic, so the
-    result is bit-exact across engines and oracle-hashable (the float
-    ``pagerank`` above is tolerance-tested only; float sums depend on
-    partition reduction order).
+    result is bit-exact across engines and oracle-hashable (float sums
+    depend on partition reduction order).
 
     Ranks are integers scaled by ``scale``; each iteration is
         share(u)  = rank(u) div out_deg(u)
@@ -514,7 +478,7 @@ def pagerank_fixed_point(
     The edge list is treated as DIRECTED; symmetrize upstream for an
     undirected graph (then every node has out-degree >= 1 and no
     dangling-mass term is needed; dangling nodes in a directed input
-    simply leak their mass, as the float twin does).
+    simply leak their mass).
 
     Scale shape per iteration: one N-row projection (share), one
     edge-keyed equi-join shuffling |E| share rows, one map-side-
@@ -544,24 +508,8 @@ def pagerank_fixed_point(
     )
     ranks = nodes.withColumn("rank", F.lit(scale).cast("long"))
     for _ in range(n_iter):
-        shares = (
-            ranks.join(out_deg, ranks["node"] == out_deg["s"])
-            .select(F.col("s"), F.expr("rank div deg").alias("share"))
-        )
-        inflow = (
-            e.join(shares, "s")
-            .groupBy(F.col("t").alias("node"))
-            .agg(F.sum("share").alias("inflow"))
-        )
-        ranks = nodes.join(inflow, "node", "left").select(
-            "node",
-            (
-                F.lit(teleport)
-                + F.expr(
-                    f"({damping_num} * coalesce(inflow, CAST(0 AS BIGINT)))"
-                    f" div {damping_den}"
-                )
-            ).alias("rank"),
+        ranks = _pagerank_round(
+            nodes, ranks, e, out_deg, teleport, damping_num, damping_den
         )
     return ranks
 
@@ -587,8 +535,8 @@ def pagerank_converged(
     quantization floor of a few units/node sits far below the
     default). The fixpoint sibling of
     ``kcore``/``bfs_depths`` for the gated constant-round ``g_pagerank``
-    (plans/graph_q.py): each round's update expression is IDENTICAL to
-    ``pagerank_fixed_point``'s, so running that with ``n_iter=rounds``
+    (plans/graph_q.py): both run the same ``_pagerank_round`` update,
+    so running ``pagerank_fixed_point`` with ``n_iter=rounds``
     reproduces this result bit-for-bit (pinned in test_graph) — the
     convergence wrapper adds a stopping rule, never different
     arithmetic.
@@ -626,15 +574,6 @@ def pagerank_converged(
     if eps_units is None:
         eps_units = n_nodes * max(scale // 1_000_000, 1)
     for rounds in range(1, max_iter + 1):
-        shares = (
-            ranks.join(out_deg, ranks["node"] == out_deg["s"])
-            .select(F.col("s"), F.expr("rank div deg").alias("share"))
-        )
-        inflow = (
-            e.join(shares, "s")
-            .groupBy(F.col("t").alias("node"))
-            .agg(F.sum("share").alias("inflow"))
-        )
         # Derive the new ranks from the CURRENT rank table (same node
         # set as ``nodes`` — ranks is nodes × rank by construction), so
         # the old rank is available as ``prev`` and the L1 delta rides
@@ -643,15 +582,8 @@ def pagerank_converged(
         # aggregate job per round is gone (guide §2.4). Ranks are
         # bit-identical — the update expression never reads prev.
         new_ranks, got = _observed_checkpoint(
-            ranks.join(inflow, "node", "left").select(
-                "node",
-                (
-                    F.lit(teleport)
-                    + F.expr(
-                        f"({damping_num} * coalesce(inflow, CAST(0 AS BIGINT)))"
-                        f" div {damping_den}"
-                    )
-                ).alias("rank"),
+            _pagerank_round(
+                ranks, ranks, e, out_deg, teleport, damping_num, damping_den,
                 F.col("rank").alias("prev"),
             ),
             [
@@ -754,7 +686,7 @@ def connected_components_star(
     # place after the one exchange (guide §2.4 — operations keyed the
     # same way share one exchange). Measured at sf0.1: ~20% off the
     # whole loop, identical edge sets every round
-    # (tools/probe_star_ab.py; OPTIMIZATION_r13.md).
+    # (OPTIMIZATION_r13.md batch 3).
     _w_u = Window.partitionBy("u")
 
     def _large_star(df: DataFrame) -> DataFrame:

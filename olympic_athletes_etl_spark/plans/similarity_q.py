@@ -1055,7 +1055,7 @@ def _km_fit(n: DataFrame, train_mod: int = 1) -> list[tuple[int, list[int]]]:
     # derivations of the identical frame. In-plan intermediate, computed
     # fresh from parquet on every fit call (never cached across runs);
     # released as soon as the fit returns. Fits are bit-identical — the
-    # checkpoint replays the same rows (tools/probe_fitbase.py:
+    # checkpoint replays the same rows (OPTIMIZATION_r14.md batch 2:
     # identical=True on all pairs, km round −12–18%).
     base = n.select("vec_id", "vq", "qnrm").localCheckpoint(eager=True)
     try:
@@ -1582,15 +1582,13 @@ def _pq_oracle() -> str:
 def _pq_adc_exprs(
     books: dict[int, list[tuple[int, list[int]]]],
     probe_q: list[int],
-    with_codes: bool = True,
-) -> tuple[dict[str, F.Column], F.Column, F.Column]:
-    """Per-subspace code columns plus the ADC accumulators for a collected
-    integer probe vector: returns ``(code_cols, num_expr, cn2_expr)``.
+) -> tuple[F.Column, F.Column]:
+    """The ADC accumulators for a collected integer probe vector over the
+    ``code{j}`` columns: returns ``(num_expr, cn2_expr)``.
     The pdot/cn2 lookup tables are exact Python-int arithmetic folded into
     literal maps (bounded: _PQ_KSUB entries per subspace), so the scored
     scan touches only the code columns — shared by s_ann_pq (full-corpus
     ADC) and s_ann_ivfpq (probed-lists ADC)."""
-    code_cols: dict[str, F.Column] = {}
     num_terms: list[str] = []
     cn2_terms: list[str] = []
     for j, cents in sorted(books.items()):
@@ -1604,15 +1602,13 @@ def _pq_adc_exprs(
             f"{int(c_id)}, {_dlit(sum(c * c for c in comps))}"
             for c_id, comps in cents
         )
-        if with_codes:
-            code_cols[f"code{j}"] = _pq_code_col(cents, j)
         num_terms.append(f"element_at(map({pdot_items}), code{j})")
         cn2_terms.append(f"element_at(map({cn2_items}), code{j})")
     # left-associated sums — same fold order as the previous
     # lit(0.0) + e0 + e1 + ... Column chain (0.0 + e0 == e0)
     num_expr = F.expr("(" + " + ".join(num_terms) + ")")
     cn2_expr = F.expr("(" + " + ".join(cn2_terms) + ")")
-    return code_cols, num_expr, cn2_expr
+    return num_expr, cn2_expr
 
 
 def _with_np_codes(
@@ -1660,7 +1656,7 @@ def _pq_ann_search(
         .collect()[0]["vq"]
     ]
 
-    _unused, num_expr, cn2_expr = _pq_adc_exprs(books, probe_q, with_codes=False)
+    num_expr, cn2_expr = _pq_adc_exprs(books, probe_q)
     scored = _with_np_codes(n, books)
 
     # ADC cosine denominator: PROBE's quantized norm (a constant — exact
@@ -1785,7 +1781,7 @@ def _ivfpq_search(
         .select("vq")
         .collect()[0]["vq"]
     ]
-    _unused, num_expr, cn2_expr = _pq_adc_exprs(books, probe_q, with_codes=False)
+    num_expr, cn2_expr = _pq_adc_exprs(books, probe_q)
     # Restrict BEFORE encoding: only probed-list rows pay the in-row code
     # assignment (at 100 TB both the codes and list_id are precomputed
     # columns and this is pure partition pruning + a narrow scan).
@@ -2128,7 +2124,7 @@ def _ivfpq_search_stored(
     codebook-argmax projection of the in-plan form is gone), shortlist,
     exact re-rank against the stored raw vectors with the probe shipped
     as literals. Zero joins, zero shuffles before the bounded top-ks."""
-    _unused, num_expr, cn2_expr = _pq_adc_exprs(books, probe_q, with_codes=False)
+    num_expr, cn2_expr = _pq_adc_exprs(books, probe_q)
     probe_qnrm = float(sum(x * x for x in probe_q)) ** 0.5
     adc = num_expr / (F.lit(probe_qnrm) * F.sqrt(cn2_expr))
     shortlist = (

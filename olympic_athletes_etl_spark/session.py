@@ -1,7 +1,9 @@
 """SparkSession factory.
 
-Local-mode defaults tuned for the test harness (local[32], 128 GiB box) but
-expressed so the same code runs unchanged on a multi-executor cluster:
+Local-mode defaults sized from the machine it runs on (every usable core,
+a driver heap of 40 % of physical memory; ``SPARK_GRAFT_CPUS`` and
+``SPARK_DRIVER_MEMORY`` override them) but expressed so the same code runs
+unchanged on a multi-executor cluster:
 
 - AQE on (runtime shuffle-partition coalescing, skew-join splitting) — at
   100 TB this is what keeps post-filter partitions right-sized without
@@ -23,12 +25,26 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _local_sizing() -> tuple[str, str]:
+    """(cores, driver memory) for the local session: the env overrides,
+    else every core this process may run on and 40 % of ``MemTotal`` —
+    a fixed heap can exceed a small machine's memory, and the JVM is then
+    OOM-killed instead of spilling."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+    mem = os.environ.get("SPARK_DRIVER_MEMORY")
+    if not mem:
+        with open("/proc/meminfo", encoding="ascii") as f:
+            kib = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+        mem = f"{max(1024, kib * 2 // 5 // 1024)}m"
+    return cpus, mem
+
+
 def get_spark(
     app_name: str = "olympic-athletes-etl-spark",
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus, driver_memory = _local_sizing()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -39,7 +55,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.legacy.timeParserPolicy", "CORRECTED")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

@@ -39,49 +39,6 @@ def test_dedup_clusters_includes_singletons(spark):
 
 
 # ---------------------------------------------------------------------------
-# pagerank
-# ---------------------------------------------------------------------------
-def test_pagerank_uniform_on_symmetric_cycle(spark):
-    from olympic_athletes_etl_spark.operators.graph import pagerank
-
-    # directed 4-cycle: perfectly symmetric → all ranks equal after norm
-    edges = spark.createDataFrame(
-        [(0, 1), (1, 2), (2, 3), (3, 0)], ["src", "dst"]
-    )
-    ranks = {r["vertex"]: r["rank"] for r in pagerank(edges).collect()}
-    assert set(ranks) == {0, 1, 2, 3}
-    for v in ranks.values():
-        assert abs(v - 1.0) < 1e-9
-
-
-def test_pagerank_hub_outranks_leaves_and_conserves_mass(spark):
-    from olympic_athletes_etl_spark.operators.graph import pagerank
-
-    # pure star into vertex 0 (a dangling sink): it collects every
-    # leaf's contribution while the leaves stay at the teleport floor
-    edges = spark.createDataFrame([(i, 0) for i in range(1, 6)], ["src", "dst"])
-    rows = pagerank(edges).collect()
-    ranks = {r["vertex"]: r["rank"] for r in rows}
-    assert ranks[0] == max(ranks.values())
-    for leaf in range(1, 6):
-        assert ranks[0] > ranks[leaf]
-    # normalized: total == n_vertices
-    assert abs(sum(ranks.values()) - len(ranks)) < 1e-6
-
-
-def test_pagerank_deterministic_across_runs(spark):
-    from olympic_athletes_etl_spark.operators.graph import pagerank
-
-    edges = spark.createDataFrame(
-        [(a, b) for a in range(6) for b in range(6) if (a * 7 + b) % 3 == 0 and a != b],
-        ["src", "dst"],
-    )
-    r1 = sorted((r["vertex"], r["rank"]) for r in pagerank(edges).collect())
-    r2 = sorted((r["vertex"], r["rank"]) for r in pagerank(edges).collect())
-    assert r1 == r2
-
-
-# ---------------------------------------------------------------------------
 # triangle_stats — adversarial shapes for the degree-orientation logic
 # ---------------------------------------------------------------------------
 

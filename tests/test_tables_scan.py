@@ -70,15 +70,22 @@ def test_single_file(tmp_path):
     assert tables._scan_row_groups(str(p), 999) == 1
 
 
-def test_spread_decision_unchanged(many_file_dir, spark):
+def test_spread_decision_unchanged(many_file_dir, tmp_path, spark, monkeypatch):
     """spread() must no-op on a many-row-group layout and fire on a
-    single-row-group one — same behavior as the r13 full-count form."""
+    single-row-group one — same behavior as the r13 full-count form.
+    Parallelism is pinned to 8 (threshold 4) so both branches are
+    asserted whatever the session's core count."""
+    monkeypatch.setattr(
+        type(spark.sparkContext), "defaultParallelism", property(lambda sc: 8)
+    )
+    one = tmp_path / "one.parquet"
+    real_pq.write_table(pa.table({"x": list(range(10))}), one)
     df = spark.range(10)
-    par = spark.sparkContext.defaultParallelism
     tables._scan_row_groups.cache_clear()
-    out = tables.spread(df, spark, many_file_dir, "id")
-    if 20 >= max(2, par // 2):
-        assert out is df  # no-op: layout already splits
+    assert tables.spread(df, spark, many_file_dir, "id") is df  # 20 >= 4
+    out = tables.spread(df, spark, str(one), "id")  # 1 < 4
+    assert out is not df
+    assert out.rdd.getNumPartitions() == 8
     tables._scan_row_groups.cache_clear()
 
 
